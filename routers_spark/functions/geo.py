@@ -8,6 +8,8 @@ behavior it reproduces.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -91,6 +93,21 @@ def line_locate_point_np(ax, ay, bx, by, px, py) -> np.ndarray:
     return np.where(den == 0.0, np.nan, t)
 
 
+def atan2_np(y, x) -> np.ndarray:
+    """Elementwise ``atan2`` through libm (``math.atan2``), independent of
+    array layout. ``np.arctan2`` is not: on AVX-512 builds numpy runs a
+    SIMD kernel whose results differ from libm's in the last ulp for some
+    inputs, and it falls back to libm whenever its conservative overlap
+    test sees the freshly allocated output buffer touching an input
+    buffer — which depends only on where the allocator put it. The same
+    inputs then gave matched longitudes that differed from run to run."""
+    y = np.asarray(y, dtype=np.float64)
+    x = np.asarray(x, dtype=np.float64)
+    out = np.fromiter(map(math.atan2, y.ravel().tolist(), x.ravel().tolist()),
+                      dtype=np.float64, count=y.size)
+    return out.reshape(y.shape)
+
+
 def point_at_ratio_np(ax, ay, bx, by, frac):
     """Haversine interpolation along the great circle a→b at ``frac`` —
     geo's ``point_at_ratio_from_start(&Haversine, frac)`` (scan.rs:34).
@@ -113,7 +130,7 @@ def point_at_ratio_np(ax, ay, bx, by, frac):
     norm = np.linalg.norm(v, axis=-1, keepdims=True)
     v = v / np.where(norm == 0.0, 1.0, norm)
     out_lat = np.degrees(np.arcsin(np.clip(v[..., 2], -1.0, 1.0)))
-    out_lon = np.degrees(np.arctan2(v[..., 1], v[..., 0]))
+    out_lon = np.degrees(atan2_np(v[..., 1], v[..., 0]))
     return out_lon, out_lat
 
 

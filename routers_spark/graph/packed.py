@@ -20,6 +20,7 @@ lifecycle of graph.rs:145-178.
 from __future__ import annotations
 
 import itertools
+from collections import OrderedDict
 
 import numpy as np
 
@@ -356,8 +357,11 @@ class PackedGraph:
 
 
 # per-executor-process memo: broadcast payloads hydrate once per worker
-# (the analog of the reference's rebuild-indices-on-load, graph.rs:145-178)
-_HYDRATED: dict[str, PackedGraph] = {}
+# (the analog of the reference's rebuild-indices-on-load, graph.rs:145-178).
+# A small LRU: every match_trips call broadcasts under a fresh key, so an
+# unbounded dict would pin one dead graph per call in a long-lived worker.
+_HYDRATED: OrderedDict[str, PackedGraph] = OrderedDict()
+_HYDRATED_CAP = 4
 
 
 def hydrate(bc, key: str) -> PackedGraph:
@@ -368,6 +372,10 @@ def hydrate(bc, key: str) -> PackedGraph:
     if g is None:
         g = PackedGraph.from_broadcastable(bc.value).build_cell_index()
         _HYDRATED[key] = g
+        while len(_HYDRATED) > _HYDRATED_CAP:
+            _HYDRATED.popitem(last=False)
+    else:
+        _HYDRATED.move_to_end(key)
     return g
 
 

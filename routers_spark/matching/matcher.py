@@ -334,23 +334,14 @@ GATE_UNION_SCHEMA = (
 )
 
 
-def _solve_pdf(pdf: pd.DataFrame, graph, opts: MatchOptions,
-               output: str) -> pd.DataFrame:
-    trip_id = pdf["trip_id"].iloc[0]
-    cols = _solve_arrays(trip_id, pdf["seq"].values, pdf["lon"].values,
-                         pdf["lat"].values, graph, opts, output)
-    if isinstance(cols, pd.DataFrame):  # interpolated path
-        return cols
-    return pd.DataFrame(cols)
-
-
 def _solve_arrays(trip_id: str, seqs, lons, lats, graph, opts: MatchOptions,
                   output: str):
-    """Solve one trip from raw column arrays. For the discretized output the
-    return value is a dict of numpy column arrays — the broadcast hot path
-    builds ONE DataFrame per Arrow batch from thousands of these instead of
-    one pandas frame per 10-row trip (per-trip frame construction + concat
-    measured ~25% of warm solver wall)."""
+    """Solve one trip from raw column arrays. For the discretized and
+    gate_union outputs the return value is a dict of numpy column arrays —
+    :func:`_solve_trips` builds ONE DataFrame per Arrow batch (or signature
+    group) from thousands of these instead of one pandas frame per 10-row
+    trip (per-trip frame construction + concat measured ~25% of warm
+    solver wall)."""
     seqs = np.asarray(seqs)
     lons = np.asarray(lons, dtype=np.float64)
     lats = np.asarray(lats, dtype=np.float64)
@@ -373,9 +364,22 @@ def _solve_arrays(trip_id: str, seqs, lons, lats, graph, opts: MatchOptions,
     return _emit_cols(trip_id, seqs, layers, result, graph, output)
 
 
-def _emit(trip_id: str, seqs, layers, result, graph, output: str) -> pd.DataFrame:
-    out = _emit_cols(trip_id, seqs, layers, result, graph, output)
-    return out if isinstance(out, pd.DataFrame) else pd.DataFrame(out)
+def _solve_trips(tid, seq, lon, lat, graph, opts: MatchOptions,
+                 output: str) -> pd.DataFrame:
+    """Solve every trip of trip-contiguous, seq-sorted column arrays into
+    ONE DataFrame: trip slices via one boundary scan, per-trip
+    :func:`_solve_arrays`, one concat — no per-trip groupby/sort/frame
+    (those measured ~25% of warm solver wall). Shared by the broadcast
+    batches and the celljoin signature groups."""
+    cuts = np.nonzero(tid[1:] != tid[:-1])[0] + 1
+    bounds = np.concatenate([[0], cuts, [len(tid)]])
+    parts = [_solve_arrays(tid[s], seq[s:e], lon[s:e], lat[s:e], graph, opts,
+                           output)
+             for s, e in zip(bounds[:-1], bounds[1:])]
+    if output == "interpolated":
+        return pd.concat(parts, ignore_index=True)
+    return pd.DataFrame({k: np.concatenate([p[k] for p in parts])
+                         for k in parts[0]})
 
 
 def _routed_elems(layers, path, hops, graph) -> list[tuple]:
@@ -515,8 +519,7 @@ def _status_row(trip_id: str, status: str, output: str) -> pd.DataFrame:
 
 def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
                 output: str = "discretized", candidate_path: str = "broadcast",
-                salt: int = 0, solve_salt: int = 1,
-                broadcast_limit_rows: int = 5_000_000):
+                solve_salt: int = 1, broadcast_limit_rows: int = 5_000_000):
     """M17 facade: match every trip in points_df(trip_id, seq, lon, lat)
     against the road graph given as nodes(node_id, lon, lat) /
     edges(edge_id, src, dst, weight) DataFrames.
@@ -526,22 +529,22 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
         shuffle once on trip_id (the only wide dependency) and candidate
         generation + solving happen per group against the executor-resident
         index. Right when the graph fits a broadcast (the north-rule shape).
-      - "celljoin": the NO-BROADCAST scale path — candidate generation runs
-        as a distributed padded cell-cover equi-join (shard/partition.py,
-        salting via ``salt``), and each trip's solver receives its OWN road
-        subgraph (every edge within Dijkstra-bound + search of the trip,
-        P4/P5 admit semantics) through a trip_id cogroup. The global graph
-        is never collected to the driver and never broadcast. Both paths
-        produce identical matches (tie-breaks share the canonical edge_row
-        order; a sorted subset preserves it — tests/test_celljoin.py).
+      - "celljoin": the NO-BROADCAST scale path — ONE cogroup on cover
+        signature: the trips' points (keyed by ``trip_cover_sigs_cells``)
+        meet the signature's padded road subgraph (every edge within
+        Dijkstra-bound + search of the cover, P4/P5 admit semantics,
+        ``sig_subgraph_edges``). Each group packs and indexes its subgraph
+        and generates candidates + solves every trip with the same kernels
+        as the broadcast path. The global graph is never collected to the
+        driver and never broadcast. Both paths produce identical matches:
+        the pad admits every edge a point's search box can meet, and a
+        sorted subset keeps the canonical edge_row order the tie-breaks
+        depend on (tests/test_celljoin.py).
     """
     opts = opts or MatchOptions()
     schema = {"discretized": DISCRETIZED_SCHEMA,
               "interpolated": INTERPOLATED_SCHEMA,
               "gate_union": GATE_UNION_SCHEMA}[output]
-    # outputs whose per-trip emitters return raw column-array dicts (the
-    # no-per-trip-DataFrame hot path); 'interpolated' keeps the pdf path
-    raw_cols = output in ("discretized", "gate_union")
 
     if candidate_path == "broadcast":
         import uuid
@@ -581,46 +584,9 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
         # (per-group dispatch dominated the matcher's wall time at scale).
         # Trips split across batch boundaries are carried forward — rows of
         # a trip are contiguous (and seq-sorted) after sortWithinPartitions.
-        # The discretized path works on RAW ARRAYS end-to-end: trip slices
-        # via one boundary scan, per-trip solve returns column dicts, ONE
-        # DataFrame per batch — no per-trip groupby/sort/frame/concat
-        # (those measured ~25% of warm solver wall).
-        def _solve_cols_batch(tid, seq, lon, lat, graph):
-            cuts = np.nonzero(tid[1:] != tid[:-1])[0] + 1
-            bounds = np.concatenate([[0], cuts, [len(tid)]])
-            acc: dict[str, list] = {}
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                cols = _solve_arrays(tid[s], seq[s:e], lon[s:e], lat[s:e],
-                                     graph, opts, output)
-                for k, v in cols.items():
-                    acc.setdefault(k, []).append(v)
-            return pd.DataFrame(
-                {k: np.concatenate(v) for k, v in acc.items()})
-
+        # Each batch is solved on RAW ARRAYS end-to-end (_solve_trips).
         def run_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             graph = hydrate(bc, bc_key)
-            if not raw_cols:
-                carry: pd.DataFrame | None = None
-                for pdf in batches:
-                    if carry is not None and len(carry):
-                        pdf = pd.concat([carry, pdf], ignore_index=True)
-                    if not len(pdf):
-                        continue
-                    last_tid = pdf["trip_id"].iloc[-1]
-                    boundary = pdf["trip_id"].values == last_tid
-                    carry = pdf[boundary]
-                    main = pdf[~boundary]
-                    if len(main):
-                        yield pd.concat(
-                            [_solve_pdf(grp, graph, opts, output)
-                             for _, grp in main.groupby("trip_id", sort=False)],
-                            ignore_index=True)
-                if carry is not None and len(carry):
-                    yield pd.concat(
-                        [_solve_pdf(grp, graph, opts, output)
-                         for _, grp in carry.groupby("trip_id", sort=False)],
-                        ignore_index=True)
-                return
             ctid = cseq = clon = clat = None
             for pdf in batches:
                 if not len(pdf):
@@ -638,10 +604,10 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
                 ctid, cseq, clon, clat = tid[last], seq[last], lon[last], lat[last]
                 keep = ~last
                 if keep.any():
-                    yield _solve_cols_batch(tid[keep], seq[keep], lon[keep],
-                                            lat[keep], graph)
+                    yield _solve_trips(tid[keep], seq[keep], lon[keep],
+                                       lat[keep], graph, opts, output)
             if ctid is not None and len(ctid):
-                yield _solve_cols_batch(ctid, cseq, clon, clat, graph)
+                yield _solve_trips(ctid, cseq, clon, clat, graph, opts, output)
 
         # exactly spark.sql.shuffle.partitions tasks: each task carries a
         # fixed ~65 ms of Arrow-stream + worker-handshake cost, so fewer,
@@ -652,50 +618,30 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
                     .sortWithinPartitions("trip_id", "seq"))
         return prepared.mapInPandas(run_iter, schema=schema)
 
+    from pyspark.sql import functions as F
+
     from routers_spark.config import DIJKSTRA_BOUND_CM
-    from routers_spark.functions.cache import bounded_persist
     from routers_spark.shard.partition import (
-        admitted_edge_coords,
-        candidates_cell_join,
         sig_subgraph_edges,
         trip_cover_sigs_cells,
     )
 
     # pad: bound (cm→m) + search + equirectangular slop so every bounded
-    # Dijkstra expansion from any candidate stays inside the subgraph
+    # Dijkstra expansion from any candidate — and every edge a point's
+    # search box can meet — stays inside the subgraph
     pad_m = DIJKSTRA_BOUND_CM / 100.0 + opts.search_distance * 1.5 + 50.0
-    # ONE region-pruned, materialized (edge + endpoint coords) table per
-    # call, shared by the candidate cover AND the subgraph cover: the full
-    # edge table is scanned once per query, not once per cover (pruned
-    # with the WIDEST pad / coarsest grid, so each cover's own admit is a
-    # subset). bounded_persist = eager localCheckpoint — a Spark job, but
-    # no driver collect (the no-driver-jobs guard stays green); the
-    # checkpoint holds only the trips' region, KB-to-MB scale.
-    pruned = bounded_persist(
-        admitted_edge_coords(
-            edges_df.select("edge_id", "src", "dst", "weight"), nodes_df,
-            points_df, pad_m=pad_m, cell_deg=0.02),
-        "celljoin_edge_coords")
-    cand = candidates_cell_join(
-        points_df, nodes_df, edges_df,
-        search_m=opts.search_distance, emission_error=opts.emission_error,
-        salt=salt, edge_coords=pruned,
-    )
     # ONE signature aggregation per call, shared by the subgraph builder
     # (which derives (sig, cx, cy) from the carried cell arrays) and the
-    # candidate→sig join — the old shape aggregated the points twice
+    # point→sig key; subgraphs are SHARED per cover signature (one graph
+    # per distinct cell set, solved against by every trip with that cover
+    # — the per-shard graph analog), not duplicated per trip
     sigs_cells = trip_cover_sigs_cells(points_df)
-    # subgraphs are SHARED per cover signature (one graph per distinct cell
-    # set, solved against by every trip with that cover — the per-shard
-    # graph analog), not duplicated per trip
     sub = sig_subgraph_edges(points_df, nodes_df, edges_df, pad_m=pad_m,
-                             sigs_cells=sigs_cells, edge_coords=pruned)
+                             sigs_cells=sigs_cells)
     # fresh exprId for sig on this side (the alias mints one): both cogroup
     # inputs descend from the same sigs_cells frame, and Spark's ambiguous
     # self-join check rejects the shared attribute otherwise
-    from pyspark.sql import functions as F
-
-    cand_sig = cand.join(
+    pts_sig = points_df.select("trip_id", "seq", "lon", "lat").join(
         sigs_cells.select("trip_id", F.col("sig").alias("sig")), "trip_id")
 
     # skew valve: trips sharing one cover signature solve sequentially in a
@@ -703,62 +649,52 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
     # becomes a straggler. ``solve_salt`` > 1 sub-splits every signature
     # into that many solver groups (trips spread by stable hash; the shared
     # subgraph duplicates into each sub-group — trading solve_salt× graph
-    # hydrations for solve_salt× solver parallelism on the hot key).
+    # builds for solve_salt× solver parallelism on the hot key).
     # Default 1: the fixture workload's 60 sigs / 1,000 trips spread fine.
     if solve_salt > 1:
-        from pyspark.sql import functions as F
-
-        # sig is a LONG now: sub-key by hashing (sig, salt-slot) — the
-        # same value on both sides; a collision only merges solver groups
-        # into a superset subgraph (harmless, see trip_cover_sigs_cells)
-        cand_sig = cand_sig.withColumn(
+        # sig is a LONG: sub-key by hashing (sig, salt-slot) — the same
+        # value on both sides; a collision only merges solver groups into
+        # a superset subgraph (harmless, see trip_cover_sigs_cells)
+        pts_sig = pts_sig.withColumn(
             "sig", F.xxhash64("sig",
                               F.pmod(F.hash("trip_id"), F.lit(solve_salt))))
         sub = sub.withColumn(
             "sig", F.explode(F.array(*[
                 F.xxhash64("sig", F.lit(i)) for i in range(solve_salt)])))
 
-    def run_cog(cand_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _solve_cogroup_pdf(cand_pdf, edges_pdf, opts, output)
+    def run_cog(pts_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
+        return _solve_sig_group(pts_pdf, edges_pdf, opts, output)
 
     return (
-        cand_sig.groupBy("sig")
+        pts_sig.groupBy("sig")
         .cogroup(sub.groupBy("sig"))
         .applyInPandas(run_cog, schema=schema)
     )
 
 
-def _solve_cogroup_pdf(cand_pdf: pd.DataFrame, edges_pdf: pd.DataFrame,
-                       opts: MatchOptions, output: str) -> pd.DataFrame:
+def _solve_sig_group(pts_pdf: pd.DataFrame, edges_pdf: pd.DataFrame,
+                     opts: MatchOptions, output: str) -> pd.DataFrame:
     """Solve EVERY trip of one cover-signature group against the group's
-    shared padded subgraph (celljoin stage B/C): build one local
-    PackedGraph from the cogrouped edge rows, then remap the candidates'
-    natural (edge_id, src, dst) keys to local rows (order-preserving:
-    build_packed_graph canonicalizes to exactly that triple order, so
-    local row i = position i in the triple-sorted subgraph) and solve per
-    trip. Sharing the graph also shares the predicate cache across the
+    shared padded subgraph: pack + cell-index one local PackedGraph from
+    the cogrouped edge rows (endpoint coords ride on the edges, so no
+    nodes table is needed), then run the broadcast path's per-trip
+    kernels on it. build_packed_graph sorts edges by (edge_id, src, dst),
+    so the local rows are a sorted subset of the global ones and candidate
+    order — hence every trellis tie-break — agrees with the broadcast
+    path. Sharing the graph also shares the predicate cache across the
     group's trips — the per-shard-matcher economics of the reference
-    (bin/matcher.rs:48-55).
-    R6 analog: a candidate edge missing from the subgraph (impossible when
-    the padding covers the bound; defensive for skew in the equirectangular
-    pad) is DOWNGRADED to an edge_row=-1 marker, never silently removed —
-    removal could empty a seq's row set and shorten the trip (the
-    round-4 celljoin refine-drop bug class); a marker instead yields an
-    empty layer and the all-or-nothing unanchored rejection, while
-    markers alongside surviving candidates are inert (layers are built
-    from edge_row >= 0 rows only)."""
-    if len(cand_pdf) == 0:
-        # schema-typed empty frame
+    (bin/matcher.rs:48-55)."""
+    if len(pts_pdf) == 0:
+        # a solve_salt sub-group with no trips: schema-typed empty frame
         return _status_row("", "unanchored", output).iloc[0:0]
-    trip_ids = cand_pdf["trip_id"].unique()
+    pts_pdf = pts_pdf.sort_values(["trip_id", "seq"], kind="stable")
+    tid = pts_pdf["trip_id"].values
     if len(edges_pdf) == 0:
         return pd.concat([_status_row(t, "unanchored", output)
-                          for t in trip_ids], ignore_index=True)
+                          for t in pd.unique(tid)], ignore_index=True)
 
     from routers_spark.graph.packed import build_packed_graph
 
-    key = ["edge_id", "src", "dst"]
-    edges_pdf = edges_pdf.sort_values(key, kind="stable").reset_index(drop=True)
     nodes_local = pd.DataFrame({
         "node_id": np.concatenate([edges_pdf["src"].values,
                                    edges_pdf["dst"].values]),
@@ -766,113 +702,7 @@ def _solve_cogroup_pdf(cand_pdf: pd.DataFrame, edges_pdf: pd.DataFrame,
         "lat": np.concatenate([edges_pdf["ay"].values, edges_pdf["by"].values]),
     }).drop_duplicates("node_id")
     g = build_packed_graph(
-        nodes_local, edges_pdf[["edge_id", "src", "dst", "weight"]])
-
-    # natural key -> local row, ONE merge for the whole group (markers and
-    # absent edges fall out of the left join as -1). Full-triple ties are
-    # duplicate edges — interchangeable, first row wins.
-    local = edges_pdf[key].copy()
-    local["edge_row"] = np.arange(len(local), dtype=np.int64)
-    local = local.drop_duplicates(key, keep="first")
-    cand_pdf = cand_pdf.merge(local, on=key, how="left")
-    cand_pdf["edge_row"] = (cand_pdf["edge_row"].fillna(-1)
-                            .astype(np.int64))
-    if output in ("discretized", "gate_union"):
-        # raw-array hot path, mirroring the broadcast _solve_cols_batch:
-        # ONE sort of the whole group, trip/seq slices via boundary scans,
-        # per-trip solve returns column dicts, ONE DataFrame per group.
-        # The previous per-trip pandas loop (sort_values + groupby per
-        # 10-row trip) measured ~15 s of the 24 s celljoin wall at 20k
-        # trips — the frames, not the Viterbi, were the cost.
-        cand_pdf = cand_pdf.sort_values(["trip_id", "seq", "edge_row"],
-                                        kind="stable")
-        tid = cand_pdf["trip_id"].values
-        seq = cand_pdf["seq"].values.astype(np.int64)
-        er = cand_pdf["edge_row"].values
-        frac = cand_pdf["frac"].values.astype(np.float64)
-        px = cand_pdf["px"].values.astype(np.float64)
-        py = cand_pdf["py"].values.astype(np.float64)
-        dist = cand_pdf["dist_m"].values.astype(np.float64)
-        emis = cand_pdf["emission"].values
-        cuts = np.nonzero(tid[1:] != tid[:-1])[0] + 1
-        bounds = np.concatenate([[0], cuts, [len(tid)]])
-        acc: dict[str, list] = {}
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            cols = _solve_candidate_arrays(
-                tid[s], seq[s:e], er[s:e], frac[s:e], px[s:e], py[s:e],
-                dist[s:e], emis[s:e], g, opts, output)
-            for k, v in cols.items():
-                acc.setdefault(k, []).append(v)
-        return pd.DataFrame({k: np.concatenate(v) for k, v in acc.items()})
-    outs = []
-    for _, tp in cand_pdf.groupby("trip_id", sort=False):
-        outs.append(_solve_candidates_pdf(tp, g, opts, output))
-    return pd.concat(outs, ignore_index=True)
-
-
-def _solve_candidate_arrays(trip_id: str, seq, er, frac, px, py, dist, emis,
-                            graph, opts: MatchOptions, output: str):
-    """Solve one trip from pre-joined candidate COLUMN ARRAYS already
-    sorted by (seq, edge_row) — the celljoin twin of _solve_arrays.
-    edge_row == -1 marks an unanchored point (empty layer)."""
-    scuts = np.nonzero(seq[1:] != seq[:-1])[0] + 1
-    sb = np.concatenate([[0], scuts, [len(seq)]])
-    layers = []
-    seqs = []
-    for a, b in zip(sb[:-1], sb[1:]):
-        rows = er[a:b]
-        m = rows >= 0
-        layers.append({
-            "edge_row": rows[m],
-            "frac": frac[a:b][m],
-            "px": px[a:b][m], "py": py[a:b][m],
-            "dist_m": dist[a:b][m],
-            "emission": emis[a:b][m].astype(np.uint32),
-        })
-        seqs.append(seq[a])
-    seqs = np.asarray(seqs)
-    if opts.drop_unanchored:
-        keep = [i for i, l in enumerate(layers) if len(l["edge_row"]) > 0]
-        layers = [layers[i] for i in keep]
-        seqs = seqs[keep]
-        if not layers:
-            return _status_cols(trip_id, "unanchored", output)
-
-    result = solve_trip(graph, layers, opts)
-    if result["status"] != "matched":
-        return _status_cols(trip_id, result["status"], output)
-    return _emit_cols(trip_id, seqs, layers, result, graph, output)
-
-
-def _solve_candidates_pdf(pdf: pd.DataFrame, graph, opts: MatchOptions,
-                          output: str) -> pd.DataFrame:
-    """Solve one trip from pre-joined candidate rows (celljoin stage A
-    output). Layers are rebuilt per seq with candidates in canonical
-    edge_row order; edge_row == -1 marks an unanchored point."""
-    trip_id = pdf["trip_id"].iloc[0]
-    pdf = pdf.sort_values(["seq", "edge_row"], kind="stable")
-    layers = []
-    seqs = []
-    for seq, grp in pdf.groupby("seq", sort=True):
-        rows = grp[grp["edge_row"] >= 0]
-        layers.append({
-            "edge_row": rows["edge_row"].values.astype(np.int64),
-            "frac": rows["frac"].values.astype(np.float64),
-            "px": rows["px"].values.astype(np.float64),
-            "py": rows["py"].values.astype(np.float64),
-            "dist_m": rows["dist_m"].values.astype(np.float64),
-            "emission": rows["emission"].values.astype(np.uint32),
-        })
-        seqs.append(seq)
-    seqs = np.asarray(seqs)
-    if opts.drop_unanchored:
-        keep = [i for i, l in enumerate(layers) if len(l["edge_row"]) > 0]
-        layers = [layers[i] for i in keep]
-        seqs = seqs[keep]
-        if not layers:
-            return _status_row(trip_id, "unanchored", output)
-
-    result = solve_trip(graph, layers, opts)
-    if result["status"] != "matched":
-        return _status_row(trip_id, result["status"], output)
-    return _emit(trip_id, seqs, layers, result, graph, output)
+        nodes_local, edges_pdf[["edge_id", "src", "dst", "weight"]]
+    ).build_cell_index()
+    return _solve_trips(tid, pts_pdf["seq"].values, pts_pdf["lon"].values,
+                        pts_pdf["lat"].values, g, opts, output)

@@ -1941,9 +1941,10 @@ def _mme_run(spark: SparkSession, sf_dir: str,
     register_views(spark, sf_dir)
     points = spark.sql(_mme_points_sql()).drop("road")
     if candidate_path == "celljoin":
-        # the celljoin lineage consumes points four ways (cells, sig agg,
-        # region bounds, candidates) — materialize the 100k-row projection
-        # once instead of re-deriving it from events per consumer
+        # the celljoin lineage consumes points twice (the cover-sig agg
+        # and the cogroup's point side) — materialize the 100k-row
+        # projection once instead of re-deriving it from events per
+        # consumer
         from routers_spark.functions.cache import bounded_persist
 
         points = bounded_persist(points, "mme_points")
@@ -1997,8 +1998,8 @@ def _q_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @nosql_query("map_match_celljoin")
 def _q_match_celljoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M1-M18 over the NO-BROADCAST scale path: distributed padded
-    cell-cover candidate join + per-trip subgraph cogroup — the graph is
+    """M1-M18 over the NO-BROADCAST scale path: one cogroup of the trips'
+    points with their cover signature's padded subgraph — the graph is
     never collected to the driver and never broadcast (parity with the
     broadcast path asserted in tests/test_celljoin.py, including the
     300-graph churn regression)."""
@@ -2012,9 +2013,9 @@ def _q_match_celljoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_map_match_exact_celljoin(dialect: str) -> str:
     """The NO-BROADCAST scale path under the driver oracle (late r4): the
     SAME corridor closed form as map_match_exact, but the Spark side runs
-    ``match_trips(candidate_path='celljoin')`` — distributed padded
-    cell-cover candidate join, pinned-quantile edge rank, per-trip
-    subgraph cogroup; the global graph is never collected or broadcast.
+    ``match_trips(candidate_path='celljoin')`` — one cogroup of the trips'
+    points with their cover signature's padded subgraph, candidates
+    generated per group; the global graph is never collected or broadcast.
     Together with map_match_exact this puts BOTH candidate paths of the
     flagship facade under hash gates — and since r5's widening both rows
     ALSO hash M16 interpolated RoutedPath output (elem order, kinds,

@@ -1,18 +1,20 @@
-"""Padded cell-cover edge partitioning (P4/P5) and the DataFrame-level
-candidate join — the scale path that drops the broadcast requirement for
-huge graphs.
+"""Padded cell-cover edge partitioning (P4/P5) — the scale path that drops
+the broadcast requirement for huge graphs.
 
 The reference's shard builder admits an edge into a cell when the edge
 intersects the cell's padded bounds (libs/routers_shard/src/selection.rs:
 52-96 equirectangular padding with M_PER_DEG = 111_320, cos-lat corrected;
 network.rs:110-169 admit rules). Here that becomes: explode every edge to
-the integer grid cells its padded bbox covers, join points on their single
-cell, refine, project — boundary correctness via duplication (O11), no
-dedup needed because a point consumes exactly one cell's edge list.
+the integer grid cells its padded bbox covers and join consumers on their
+cells — boundary correctness via duplication (O11).
 
-Everything before the projection UDF is JVM Column algebra (explode via
-``sequence``), so Catalyst prunes/pushes; the projection+emission kernel is
-ONE vectorized Arrow pass over the joined pairs.
+The celljoin matcher consumes the per-cover-signature subgraphs
+(:func:`trip_cover_sigs_cells` + :func:`sig_subgraph_edges`) and generates
+candidates inside its solver groups. :func:`candidates_cell_join` is the
+standalone DataFrame-level candidate generator: a point⋈cover join on the
+point's single fine cell, then ONE vectorized Arrow projection pass.
+Everything before that UDF is JVM Column algebra (explode via
+``sequence``), so Catalyst prunes/pushes.
 """
 
 from __future__ import annotations
@@ -53,15 +55,13 @@ def admitted_edge_coords(edges_df: DataFrame, nodes_df: DataFrame,
                          points_df: DataFrame, pad_m: float,
                          cell_deg: float,
                          lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """Degree-space region prune shared by every cover of one match call:
-    edges whose ``pad_m``-padded bbox, expanded by one ``cell_deg`` (the
+    """Degree-space region prune: edges (with endpoint coords) whose
+    ``pad_m``-padded bbox, expanded by one ``cell_deg`` (the
     cell-quantization slack), overlaps the points' global lon/lat range.
-    Strict superset of any per-cover cell-range admit with pad ≤ pad_m
-    and grid ≥ cell_deg — so the caller can compute this ONCE with the
-    widest pad/coarsest grid and feed every cover from it, paying the
-    full-edge-table scan once per query instead of once per cover (the
-    r6 crossover leg's remaining edge-linear term). One broadcast 1-row
-    aggregate; no driver jobs."""
+    Strict superset of any cell-range admit with pad ≤ pad_m and grid ≥
+    cell_deg, so one prune can feed several covers. The match path does
+    not use it: its single cover (:func:`sig_subgraph_edges`) prunes on
+    its own cell range. One broadcast 1-row aggregate; no driver jobs."""
     e = edge_endpoint_coords(edges_df, nodes_df)
     pad_lat = pad_m / M_PER_DEG
     pad_lon = F.lit(pad_m) / (
@@ -84,8 +84,7 @@ def admitted_edge_coords(edges_df: DataFrame, nodes_df: DataFrame,
 
 def edges_with_cover_cells(edges_df: DataFrame, nodes_df: DataFrame,
                            cell_deg: float, pad_m: float,
-                           cell_bounds: DataFrame | None = None,
-                           edge_coords: DataFrame | None = None) -> DataFrame:
+                           cell_bounds: DataFrame | None = None) -> DataFrame:
     """Edge rows exploded to covered (cx, cy) cells: bbox of the edge's
     endpoints expanded by ``pad_m`` (equirectangular °/m, cos-lat corrected
     — selection.rs:16-29), floored onto the world-anchored grid.
@@ -99,13 +98,8 @@ def edges_with_cover_cells(edges_df: DataFrame, nodes_df: DataFrame,
     whole-table per query (the flat celljoin overhead of the r5 crossover
     leg). Pure JVM: a broadcast of the 1-row aggregate, no driver job.
     Dropped edges share no cell with any consumer cell by construction,
-    so join results are unchanged.
-
-    ``edge_coords`` (optional): a frame already carrying (edge cols...,
-    ax, ay, bx, by) — e.g. the shared :func:`admitted_edge_coords` prune
-    of one match call — skips the node joins here."""
-    e = edge_coords if edge_coords is not None \
-        else edge_endpoint_coords(edges_df, nodes_df)
+    so join results are unchanged."""
+    e = edge_endpoint_coords(edges_df, nodes_df)
     pad_lat = pad_m / M_PER_DEG
     pad_lon = F.lit(pad_m) / (
         F.lit(M_PER_DEG)
@@ -374,8 +368,7 @@ def trip_cover_sigs(points_df: DataFrame,
 def sig_subgraph_edges(points_df: DataFrame, nodes_df: DataFrame,
                        edges_df: DataFrame, pad_m: float,
                        cell_deg: float = 0.02,
-                       sigs_cells: DataFrame | None = None,
-                       edge_coords: DataFrame | None = None) -> DataFrame:
+                       sigs_cells: DataFrame | None = None) -> DataFrame:
     """Shared subgraphs keyed by cover signature: every edge whose padded
     bbox shares a coarse cell with the signature's cell set (the P4/P5
     admit rule). Row volume scales with DISTINCT signatures — measured 60
@@ -387,7 +380,7 @@ def sig_subgraph_edges(points_df: DataFrame, nodes_df: DataFrame,
 
     ``sigs_cells`` lets the caller share one
     :func:`trip_cover_sigs_cells` aggregation across this builder and the
-    candidate→sig join (match_trips computes it once per call). Since all
+    point→sig key (match_trips computes it once per call). Since all
     trips of a signature carry the IDENTICAL cell set (the sig is a hash
     of the set), (sig, cx, cy) comes from one per-sig dedup + explode of
     the carried array — no second pass over the points. The output is
@@ -406,9 +399,7 @@ def sig_subgraph_edges(points_df: DataFrame, nodes_df: DataFrame,
     )
     cover = edges_with_cover_cells(
         base, nodes_df, cell_deg, pad_m=pad_m,
-        cell_bounds=None if edge_coords is not None
-        else _cell_range_bounds(sig_cells),
-        edge_coords=edge_coords)
+        cell_bounds=_cell_range_bounds(sig_cells))
     return (
         sig_cells.join(cover, ["cx", "cy"])
         .select("sig", "edge_id", "src", "dst", "weight",
@@ -423,10 +414,16 @@ def candidates_cell_join(points_df: DataFrame, nodes_df: DataFrame,
                          search_m: float = DEFAULT_SEARCH_DISTANCE_M,
                          emission_error: float = DEFAULT_EMISSION_ERROR_M,
                          cell_deg: float = 0.002,
-                         salt: int = 0,
-                         edge_coords: DataFrame | None = None) -> DataFrame:
-    """Stage A of the match lifecycle as a distributed cell equi-join
-    (SURVEY §3.1): points join the padded edge cover on their single cell,
+                         salt: int = 0) -> DataFrame:
+    """Candidate generation as a standalone distributed cell equi-join
+    (SURVEY §3.1). NOT on the match path: ``match_trips(candidate_path=
+    "celljoin")`` generates candidates inside its per-signature cogroup
+    against the packed subgraph (the broadcast path's kernels), so no
+    candidate row is ever shuffled. This function stays as the
+    DataFrame-level generator for callers that want candidate rows
+    themselves (phase timing, parity tests).
+
+    Points join the padded edge cover on their single cell,
     a JVM bbox prefilter reproduces the square-box scan (X4 semantics via
     the projection refinement below), then ONE Arrow pass projects and
     prices every surviving pair (X6 + M2). Unanchored points are preserved
@@ -449,28 +446,20 @@ def candidates_cell_join(points_df: DataFrame, nodes_df: DataFrame,
     explicit skew-handling knob (north rule) on top of AQE's skew splits.
 
     Candidates identify their edge by the NATURAL key (edge_id, src, dst)
-    — no global dense rank is computed anywhere on this path. The solver
-    only needs an ordering that agrees with ``build_packed_graph``'s
-    canonical (edge_id, src, dst) sort (trellis tie-breaks + the
-    candidate→local-row remap), and the triple itself IS that ordering; a
-    dense rank (the previous design) additionally cost one approxQuantile
-    pass, one counts collect, and an enumeration shuffle over the FULL
-    edge table per query — a driver-blocking extra scan that dominated
-    celljoin wall time (13.5 s of 22 s at 362k edges / 200k points) and
-    would be a full pass over a 100 TB edge table at scale. Rows that tie
-    on the full triple can only be duplicate edges (same id, same
-    endpoints) — interchangeable for matching, so the key is effectively
-    unique. ``edges_with_rows`` (the rank) remains the SHARD FILE format's
-    row id (write_shards), where it is computed once per build, not per
-    query.
+    — no global dense rank is computed. Sorting by the triple reproduces
+    ``build_packed_graph``'s canonical candidate order; a dense rank would
+    cost one approxQuantile pass, one counts collect, and an enumeration
+    shuffle over the FULL edge table per call. Rows that tie on the full
+    triple can only be duplicate edges (same id, same endpoints) —
+    interchangeable for matching. ``edges_with_rows`` (the rank) remains
+    the SHARD FILE format's row id (write_shards), where it is computed
+    once per build, not per query.
     """
     base = edges_df.select("edge_id", "src", "dst", "weight")
     pts = point_cells(points_df, cell_deg)
     edges_cover = edges_with_cover_cells(
         base, nodes_df, cell_deg, pad_m=search_m * 1.5 + 10.0,
-        cell_bounds=None if edge_coords is not None
-        else _cell_range_bounds(pts.select("cx", "cy")),
-        edge_coords=edge_coords,
+        cell_bounds=_cell_range_bounds(pts.select("cx", "cy")),
     )
     join_keys = ["cx", "cy"]
     if salt > 0:

@@ -36,12 +36,29 @@ def test_celljoin_matches_broadcast(spark, inputs):
 
 
 def test_celljoin_with_salt_matches(spark, inputs):
+    """Salting the standalone candidate join (hot cells split into
+    ``salt`` sub-keys, each point joining one) must not change any
+    point's candidate set, nor which points are left unanchored."""
+    from routers_spark.shard.partition import candidates_cell_join
+
     points_df, nodes_df, edges_df = inputs
-    a = _sorted(match_trips(points_df, nodes_df, edges_df,
-                            candidate_path="celljoin"))
-    b = _sorted(match_trips(points_df, nodes_df, edges_df,
-                            candidate_path="celljoin", salt=4))
+    key = ["trip_id", "seq", "edge_id", "src", "dst"]
+    cols = key + ["frac", "px", "py", "dist_m", "emission"]
+
+    def cands(salt):
+        pdf = candidates_cell_join(points_df, nodes_df, edges_df,
+                                   salt=salt).toPandas()
+        real = pdf[pdf.edge_id >= 0][cols].sort_values(key) \
+            .reset_index(drop=True)
+        unanchored = (set(zip(pdf.trip_id, pdf.seq))
+                      - set(zip(real.trip_id, real.seq)))
+        return real, unanchored
+
+    a, a_un = cands(0)
+    b, b_un = cands(4)
+    assert len(a) > 0
     pd.testing.assert_frame_equal(a, b)
+    assert a_un == b_un
 
 
 def test_celljoin_candidate_sets_match_boxquery(spark, inputs):
@@ -294,3 +311,56 @@ def test_celljoin_high_latitude_parity_sweep(spark):
                             candidate_path="celljoin"))
     assert (a["status"] == "matched").any()
     pd.testing.assert_frame_equal(a, b)
+
+
+def _parity_inputs(spark, duplicate_edges: bool):
+    """A grid walk with near-miss outliers (points pushed ~90-110 m off
+    every edge) and, optionally, full-row duplicates of a third of the
+    edge rows: the global graph keeps the duplicates while the celljoin
+    subgraph dedups them per (edge_id, src, dst)."""
+    nodes, edges = grid_network(12)
+    trips = walk_trips(nodes, edges, n_trips=40, points_per_trip=8, seed=31)
+    rng = np.random.default_rng(5)
+    for t in rng.choice(trips["trip_id"].unique(), size=12, replace=False):
+        rows = np.flatnonzero((trips["trip_id"] == t).values)
+        r = rows[rng.integers(0, len(rows))]
+        trips.loc[r, "lon"] = round(
+            (trips.loc[r, "lon"] + 118.5) / 0.002) * 0.002 - 118.5 + 0.001
+        trips.loc[r, "lat"] = round(
+            (trips.loc[r, "lat"] - 33.7) / 0.002) * 0.002 + 33.7 + 0.001
+    if duplicate_edges:
+        dup = edges.iloc[rng.choice(len(edges), size=len(edges) // 3,
+                                    replace=False)]
+        edges = pd.concat([edges, dup], ignore_index=True) \
+            .sample(frac=1.0, random_state=3).reset_index(drop=True)
+    return (spark.createDataFrame(trips), spark.createDataFrame(nodes),
+            spark.createDataFrame(edges))
+
+
+@pytest.mark.parametrize("case", ["duplicate_edges", "drop_unanchored",
+                                  "interpolated"])
+def test_celljoin_parity_cases(spark, case):
+    """Broadcast ≡ celljoin row for row on inputs the other parity tests
+    leave out: duplicate edge rows, streaming-style drop_unanchored, and
+    the interpolated RoutedPath output. The comparison runs twice in one
+    session (fresh plans, warm workers and predicate caches) so a result
+    that depends on worker state or group scheduling shows up."""
+    from routers_spark.matching.matcher import MatchOptions
+
+    points_df, nodes_df, edges_df = _parity_inputs(
+        spark, duplicate_edges=case == "duplicate_edges")
+    opts = MatchOptions(drop_unanchored=case == "drop_unanchored")
+    output = "interpolated" if case == "interpolated" else "discretized"
+    order = ["trip_id", "elem" if output == "interpolated" else "seq"]
+    for _ in range(2):
+        a, b = (
+            match_trips(points_df, nodes_df, edges_df, opts=opts,
+                        output=output, candidate_path=path).toPandas()
+            .sort_values(order).reset_index(drop=True)
+            for path in ("broadcast", "celljoin"))
+        assert (a["status"] == "matched").sum() > 20
+        if case == "drop_unanchored":
+            assert (a["status"] != "unanchored").all()
+        else:
+            assert (a["status"] == "unanchored").any()
+        pd.testing.assert_frame_equal(a, b)

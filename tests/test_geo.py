@@ -3,6 +3,8 @@
 interpolation (scan.rs:22-44), square box (discovery.rs:91-96), and the
 vectorized ray-cast PIP vs a brute-force scalar oracle."""
 
+import math
+
 import numpy as np
 
 from routers_spark.functions import geo
@@ -60,6 +62,18 @@ def test_point_at_ratio_endpoints_and_midpoint():
     # coincident endpoints
     lon, lat = geo.point_at_ratio_np([3.0], [4.0], [3.0], [4.0], [0.7])
     assert abs(lon[0] - 3.0) < 1e-9 and abs(lat[0] - 4.0) < 1e-9
+
+
+def test_atan2_np_is_libm_elementwise():
+    """atan2_np equals math.atan2 element by element, for contiguous and
+    strided inputs alike, so a matched longitude does not depend on which
+    numpy kernel (SIMD or scalar fallback) a buffer layout selects."""
+    rng = np.random.default_rng(7)
+    y, x = rng.normal(size=(2, 500))
+    want = [math.atan2(a, b) for a, b in zip(y, x)]
+    assert geo.atan2_np(y, x).tolist() == want
+    v = np.stack([x, y], axis=-1)  # the strided views point_at_ratio_np passes
+    assert geo.atan2_np(v[:, 1], v[:, 0]).tolist() == want
 
 
 def test_square_box_contains_radius():

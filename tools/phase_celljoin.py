@@ -1,5 +1,11 @@
-"""Phase isolation for the celljoin matcher (guide §1.4): time each stage
-of the celljoin lineage separately with the noop sink on the bench fixture.
+"""Phase isolation for the celljoin matcher: time each stage of the
+celljoin lineage separately with the noop sink on the bench fixture.
+
+The match lineage is: cover signatures (``trip_cover_sigs_cells``), the
+per-signature padded subgraph (``sig_subgraph_edges``), then ONE cogroup of
+the signature-keyed points with the subgraph that generates candidates and
+solves inside each group. ``candidates_cell_join`` is timed as well, but as
+the standalone candidate generator: it is not part of the match.
 
 Usage: python tools/phase_celljoin.py [sf_dir]
 """
@@ -57,11 +63,12 @@ def main() -> None:
         t(spark, "sigs (trip_cover_sigs)", trip_cover_sigs(points))
         t(spark, "sub (sig_subgraph_edges)",
           sig_subgraph_edges(points, nodes, edges, pad_m=pad_m))
-        cand = candidates_cell_join(
-            points, nodes, edges, search_m=DEFAULT_SEARCH_DISTANCE_M,
-            emission_error=DEFAULT_EMISSION_ERROR_M)
-        t(spark, "cand (candidates_cell_join)", cand)
-        t(spark, "cand_sig join", cand.join(trip_cover_sigs(points), "trip_id"))
+        t(spark, "pts_sig join (cogroup point side)",
+          points.join(trip_cover_sigs(points), "trip_id"))
+        t(spark, "standalone cand (candidates_cell_join, not in match)",
+          candidates_cell_join(
+              points, nodes, edges, search_m=DEFAULT_SEARCH_DISTANCE_M,
+              emission_error=DEFAULT_EMISSION_ERROR_M))
         t(spark, "FULL match_trips celljoin",
           match_trips(points, nodes, edges, candidate_path="celljoin"))
         t(spark, "FULL match_trips broadcast",
