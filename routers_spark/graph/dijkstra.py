@@ -11,8 +11,11 @@ distance reaches the threshold (``take_while``, cache.rs:320-323) — not a
 filter: later nodes with shorter distance but larger repr are cut too. That
 is the reference's reachability boundary and is reproduced exactly.
 
-Parent maps are memoised per root in a bounded LRU (8192 entries,
-cache.rs:19) — per executor process, shared across Arrow batches.
+Parent maps are memoised per (graph uid, root, profile) in a bounded LRU
+(8192 entries, cache.rs:19), one per executor process. It is shared across
+Arrow batches, tasks and calls: ``graph.packed.GraphHandle`` hands every
+call on the same road graph the same hydrated graph (same uid), so parent
+maps solved by one match serve every later match on that graph.
 """
 
 from __future__ import annotations

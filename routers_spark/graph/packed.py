@@ -12,14 +12,23 @@ flat numpy arrays:
   - a uniform cell-bucket spatial index over edge bounding boxes (the
     packed-R-tree substitute: same query API — box -> candidate edge rows)
 
-One instance is built on the driver, broadcast once, and memoised per
-executor process (module-level cache) — the "rebuild indices on load"
-lifecycle of graph.rs:145-178.
+One instance is built on the driver and broadcast through a
+:class:`GraphHandle`, which addresses the graph by a digest of its
+broadcast payload: every call on the same road graph content in one
+SparkContext reuses one Broadcast, and each executor process hydrates it
+once (module-level memo keyed by that digest) — the "rebuild indices on
+load" lifecycle of graph.rs:145-178. Because later calls get the same
+worker-resident graph object, state attached to it or keyed by its ``uid``
+(the Dijkstra adjacency lists, the predicate cache) serves every later
+match on that graph, not only the call that built it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import itertools
+import pickle
+import threading
 from collections import OrderedDict
 
 import numpy as np
@@ -356,27 +365,85 @@ class PackedGraph:
         return g
 
 
+def payload_digest(payload: dict) -> str:
+    """Content digest of a :meth:`PackedGraph.to_broadcastable` payload:
+    every field that affects a result (node ids and coordinates; edge id,
+    src, dst, weight, fwd and access tags), each with its dtype and shape."""
+    h = hashlib.blake2b(digest_size=16)
+    for name in sorted(payload):
+        v = payload[name]
+        h.update(name.encode())
+        if isinstance(v, np.ndarray):
+            v = np.ascontiguousarray(v)
+            h.update(f"{v.dtype.str}{v.shape}".encode())
+            h.update(v)
+        else:
+            h.update(pickle.dumps(v, protocol=4))
+    return h.hexdigest()
+
+
 # per-executor-process memo: broadcast payloads hydrate once per worker
-# (the analog of the reference's rebuild-indices-on-load, graph.rs:145-178).
-# A small LRU: every match_trips call broadcasts under a fresh key, so an
-# unbounded dict would pin one dead graph per call in a long-lived worker.
+# (the analog of the reference's rebuild-indices-on-load, graph.rs:145-178),
+# keyed by content digest (pyspark's Broadcast exposes no id on executors),
+# so every call on one graph finds the graph (and its uid-keyed predicate
+# cache entries) an earlier call hydrated. A small LRU bounds the graphs a
+# long-lived worker pins.
 _HYDRATED: OrderedDict[str, PackedGraph] = OrderedDict()
 _HYDRATED_CAP = 4
 
 
-def hydrate(bc, key: str) -> PackedGraph:
-    """Hydrate (and memoise) a broadcast graph in this worker process.
-    ``key`` is a caller-supplied stable token (pyspark's Broadcast exposes no
-    id on executors)."""
-    g = _HYDRATED.get(key)
-    if g is None:
-        g = PackedGraph.from_broadcastable(bc.value).build_cell_index()
-        _HYDRATED[key] = g
-        while len(_HYDRATED) > _HYDRATED_CAP:
-            _HYDRATED.popitem(last=False)
-    else:
-        _HYDRATED.move_to_end(key)
-    return g
+# driver-side registry {digest: Broadcast} of the current SparkContext. A
+# new context starts an empty one (a Broadcast never outlives its context).
+# Evicted broadcasts are unpersisted, not destroyed: a plan built earlier
+# still holds them and can re-run (executors re-fetch from the driver).
+_BROADCASTS: OrderedDict = OrderedDict()
+_BROADCASTS_SC = None
+_BROADCASTS_CAP = _HYDRATED_CAP
+_BROADCASTS_LOCK = threading.Lock()
+
+
+class GraphHandle:
+    """A road graph broadcast once per SparkContext and content: build it
+    on the driver with :meth:`build`, capture it in a task closure, and
+    call :meth:`graph` in the task for the worker-resident PackedGraph."""
+
+    def __init__(self, key: str, bc):
+        self.key = key
+        self.bc = bc
+
+    @classmethod
+    def build(cls, sc, nodes_pdf, edges_pdf) -> "GraphHandle":
+        """Pack nodes/edges frames (see :func:`build_packed_graph`) and
+        broadcast the payload, reusing the Broadcast of an earlier call on
+        the same content in this SparkContext."""
+        global _BROADCASTS_SC
+        payload = build_packed_graph(nodes_pdf, edges_pdf).to_broadcastable()
+        key = payload_digest(payload)
+        with _BROADCASTS_LOCK:
+            if _BROADCASTS_SC is not sc:
+                _BROADCASTS.clear()
+                _BROADCASTS_SC = sc
+            bc = _BROADCASTS.get(key)
+            if bc is None:
+                bc = sc.broadcast(payload)
+                _BROADCASTS[key] = bc
+                while len(_BROADCASTS) > _BROADCASTS_CAP:
+                    _BROADCASTS.popitem(last=False)[1].unpersist()
+            else:
+                _BROADCASTS.move_to_end(key)
+        return cls(key, bc)
+
+    def graph(self) -> PackedGraph:
+        """The hydrated (and memoised) graph in this executor process."""
+        g = _HYDRATED.get(self.key)
+        if g is None:
+            g = PackedGraph.from_broadcastable(self.bc.value).build_cell_index()
+            _HYDRATED[self.key] = g
+            while len(_HYDRATED) > _HYDRATED_CAP:
+                _HYDRATED.popitem(last=False)
+        else:
+            _HYDRATED.move_to_end(self.key)
+        return g
 
 
 def _normalize_access(col) -> list | None:

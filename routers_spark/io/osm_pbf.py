@@ -225,20 +225,32 @@ def _concat_packed(bufs: list) -> tuple[np.ndarray, np.ndarray]:
     Returns (values, counts) where counts[i] is how many varints buffer i
     held — the per-buffer slice boundaries for the caller. Batching here
     is the decode's hot-path fix: per-way buffers hold ~2-8 varints, and
-    one numpy call per tiny buffer costs more than the decode itself."""
+    one numpy call per tiny buffer costs more than the decode itself.
+
+    Raises ValueError on a buffer that ends mid-varint (its last byte has
+    the continuation bit set): joined, that varint would run on into the
+    next buffer's first value."""
     if not bufs:
         return np.empty(0, np.uint64), np.empty(0, np.int64)
     joined = b"".join(bytes(b) for b in bufs)
     raw = np.frombuffer(joined, dtype=np.uint8)
+    sizes = np.fromiter((len(b) for b in bufs), np.int64, len(bufs))
+    bounds = np.cumsum(sizes)
+    if (raw[bounds[sizes > 0] - 1] & 0x80).any():
+        raise ValueError("packed varint field ends mid-varint")
     vals = decode_packed_varints(joined)
     # a varint ends at each byte without the continuation bit; counts per
     # buffer = ends falling inside each buffer's byte range
     ends = np.nonzero((raw & 0x80) == 0)[0]
-    bounds = np.cumsum(np.fromiter((len(b) for b in bufs), np.int64,
-                                   len(bufs)))
     counts = np.diff(np.concatenate([[0], np.searchsorted(ends, bounds,
                                                           "left")]))
+    if counts.sum() != len(vals):
+        raise ValueError(f"packed varint fields hold {len(vals)} values, "
+                         f"buffer counts sum to {counts.sum()}")
     return vals, counts
+
+
+_REFS_ABS_SUM_LIMIT = 2.0 ** 62
 
 
 def _decode_ways_block(data: bytes) -> pd.DataFrame:
@@ -278,6 +290,11 @@ def _decode_ways_block(data: bytes) -> pd.DataFrame:
     # at every way, so within-segment cumsum = global cumsum - base)
     dvals, counts = _concat_packed(refs_bufs)
     deltas = unzigzag(dvals)
+    # every prefix of the global cumsum is bounded by the summed |delta|;
+    # refuse a block where that could wrap int64 (real blocks stay below
+    # 2^50; the float64 sum's rounding is covered by the 2x margin)
+    if np.abs(deltas.astype(np.float64)).sum() >= _REFS_ABS_SUM_LIMIT:
+        raise ValueError("way refs deltas could overflow the int64 cumsum")
     csum = np.cumsum(deltas)
     starts = np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(np.int64)
     if len(csum):

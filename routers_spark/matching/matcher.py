@@ -529,6 +529,10 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
         shuffle once on trip_id (the only wide dependency) and candidate
         generation + solving happen per group against the executor-resident
         index. Right when the graph fits a broadcast (the north-rule shape).
+        The broadcast goes through ``GraphHandle``, addressed by graph
+        content: later calls on the same road graph in one SparkContext
+        reuse the Broadcast and each worker's hydrated graph, so its
+        predicate cache carries over from call to call.
       - "celljoin": the NO-BROADCAST scale path — ONE cogroup on cover
         signature: the trips' points (keyed by ``trip_cover_sigs_cells``)
         meet the signature's padded road subgraph (every edge within
@@ -547,10 +551,9 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
               "gate_union": GATE_UNION_SCHEMA}[output]
 
     if candidate_path == "broadcast":
-        import uuid
         from collections.abc import Iterator
 
-        from routers_spark.graph.packed import build_packed_graph, hydrate
+        from routers_spark.graph.packed import GraphHandle
 
         spark = points_df.sparkSession
         # Guard the driver collect: a graph past the broadcast envelope must
@@ -572,10 +575,9 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
                     f"path) or raise the limit.")
             return pdf
 
-        g = build_packed_graph(_collect_bounded(nodes_df, "nodes"),
-                               _collect_bounded(edges_df, "edges"))
-        bc = spark.sparkContext.broadcast(g.to_broadcastable())
-        bc_key = uuid.uuid4().hex
+        handle = GraphHandle.build(spark.sparkContext,
+                                   _collect_bounded(nodes_df, "nodes"),
+                                   _collect_bounded(edges_df, "edges"))
         n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
 
         # ONE shuffle on trip_id, then mapInPandas over trip-sorted
@@ -586,7 +588,7 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
         # a trip are contiguous (and seq-sorted) after sortWithinPartitions.
         # Each batch is solved on RAW ARRAYS end-to-end (_solve_trips).
         def run_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            graph = hydrate(bc, bc_key)
+            graph = handle.graph()
             ctid = cseq = clon = clat = None
             for pdf in batches:
                 if not len(pdf):

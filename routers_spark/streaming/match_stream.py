@@ -21,6 +21,7 @@ wrapper runs it under ``applyInPandasWithState``.
 
 from __future__ import annotations
 
+import uuid
 from collections import OrderedDict
 from dataclasses import dataclass, field
 
@@ -35,11 +36,15 @@ from routers_spark.matching.matcher import (
 from routers_spark.matching.trellis import Unreachable
 
 
-# process-wide LRU of weighed boundary matrices, keyed by (graph epoch,
-# src observation position, tgt observation position) — candidates (and so
-# the matrix) are a pure function of graph + positions, letting vehicles
-# even share entries. Bounded; survives micro-batches in the long-lived
-# python worker (no state-store serialization needed).
+# process-wide LRU of weighed boundary matrices, keyed by (hydrated graph
+# uid, cache token, src observation position, tgt observation position) —
+# candidates (and so the matrix) are a pure function of graph, options and
+# positions, letting vehicles even share entries. The graph uid (never
+# id(): ids recycle) tells apart graphs that share a persisted graph_key,
+# e.g. two registries at one epoch name; the token, minted once per
+# streaming query, tells apart queries with different MatchOptions.
+# Bounded; survives micro-batches in the long-lived python worker (no
+# state-store serialization needed).
 _BOUNDARY_LRU: OrderedDict = OrderedDict()
 _BOUNDARY_LRU_CAP = 65536
 
@@ -113,10 +118,14 @@ class VehicleMatcherState:
                 opts: MatchOptions | None = None,
                 gap_seconds: int = GAP_SECONDS,
                 context_window: int = CONTEXT_WINDOW,
-                graph_key: str = "") -> list[dict]:
+                graph_key: str = "", cache_token: str = "") -> list[dict]:
         """Feed (ts_us, lon, lat) observations; returns emitted layer rows
         {ts_us, edge_id, matched_lon, matched_lat, revision, final,
         downgraded}.
+
+        Boundary matrices are cached per (graph, ``cache_token``, position
+        pair): calls that pass different ``opts`` on one graph must pass
+        different tokens (``match_stream`` mints one per query).
 
         R6 foreign-shard downgrade (matcher/entity.rs:253-258,
         bin/matcher.rs:126-132): when the state last solved against a
@@ -173,8 +182,7 @@ class VehicleMatcherState:
         # re-weighs only the boundaries its fresh points introduced
         # (weigh/mod.rs:160-168 pending-only recompute; the retained
         # interior boundaries hit the cache)
-        gtok = self.graph_key or f"uid:{graph.uid}"  # never id(): ids recycle
-        keys = [(gtok, pos_kept[k], pos_kept[k + 1])
+        keys = [(graph.uid, cache_token, pos_kept[k], pos_kept[k + 1])
                 for k in range(len(layers) - 1)]
         result = solve_trip(graph, layers, opts, boundary_keys=keys,
                             boundary_cache=_BOUNDARY_LRU)
@@ -229,8 +237,11 @@ def match_stream(events_df, nodes_df=None, edges_df=None,
     contract, not Spark's default hash (O13).
 
     Graph distribution, two modes:
-      - ``nodes_df``/``edges_df``: packed once, broadcast — fixed for the
-        life of the query (a Spark broadcast is captured at plan time).
+      - ``nodes_df``/``edges_df``: packed once, broadcast through
+        ``GraphHandle`` — fixed for the life of the query (a Spark
+        broadcast is captured at plan time). States persist a per-query
+        ``graph_key``, so a state resumed by a restarted query flags its
+        next batch ``downgraded``.
       - ``registry`` (:class:`routers_spark.streaming.epoch.GraphRegistry`):
         the R6-complete LIVE mode — each task resolves the registry's
         CURRENT epoch and hydrates that graph, so a mid-stream ``publish``
@@ -242,14 +253,15 @@ def match_stream(events_df, nodes_df=None, edges_df=None,
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from routers_spark.functions.hashing import partition_of_np
-    from routers_spark.graph.packed import build_packed_graph, hydrate
-    import uuid
+    from routers_spark.graph.packed import GraphHandle
 
     spark = events_df.sparkSession
     if registry is None:
-        g = build_packed_graph(nodes_df.toPandas(), edges_df.toPandas())
-        bc = spark.sparkContext.broadcast(g.to_broadcastable())
-        bc_key = uuid.uuid4().hex
+        handle = GraphHandle.build(spark.sparkContext, nodes_df.toPandas(),
+                                   edges_df.toPandas())
+    # one token per query, minted at plan time: the broadcast mode's
+    # persisted graph_key and the boundary-cache token of every mode
+    query_token = uuid.uuid4().hex
     opts = opts or MatchOptions(drop_unanchored=True)
 
     def update(key, pdfs, state):
@@ -259,8 +271,8 @@ def match_stream(events_df, nodes_df=None, edges_df=None,
             epoch, graph = task_graph(registry)
             gkey = f"epoch:{epoch}"
         else:
-            graph = hydrate(bc, bc_key)
-            gkey = bc_key
+            graph = handle.graph()
+            gkey = query_token
         vehicle = key[0]
         if state.exists:
             st = VehicleMatcherState.from_tuple(state.get)
@@ -271,7 +283,8 @@ def match_stream(events_df, nodes_df=None, edges_df=None,
         for pdf in pdfs:
             obs += [(int(t), float(lo), float(la)) for t, lo, la in
                     zip(pdf["ts_us"], pdf["lon"], pdf["lat"])]
-        rows = st.process(graph, obs, opts, graph_key=gkey)
+        rows = st.process(graph, obs, opts, graph_key=gkey,
+                          cache_token=query_token)
         state.update((
             [[float(a), b, c] for a, b, c in st.history],
             st.last_ts, st.revision, st.emitted_through, st.graph_key,

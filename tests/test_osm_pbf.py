@@ -282,3 +282,51 @@ def test_ways_block_batched_decode_parity(pbf_fixture):
                     assert list(got["tags"]) == list(ref["tags"])
                     n_ways += len(got)
             assert n_ways == expect_n
+
+
+def test_concat_packed_refuses_buffer_ending_mid_varint():
+    """A buffer whose last byte carries the continuation bit would bleed
+    its truncated varint into the next buffer's first value."""
+    from routers_spark.io.osm_pbf import _concat_packed
+
+    ok = _enc_varint(300)
+    for bufs in ([ok[:1], b"\x01"], [b"\x01", ok[:1]], [ok, b"", b"\x80"]):
+        with pytest.raises(ValueError, match="mid-varint"):
+            _concat_packed(bufs)
+    vals, counts = _concat_packed([ok, b"", b"\x01"])
+    assert vals.tolist() == [300, 1] and counts.tolist() == [1, 0, 1]
+
+
+def test_concat_packed_refuses_count_mismatch(monkeypatch):
+    """The per-buffer counts must account for every decoded value."""
+    import routers_spark.io.osm_pbf as pbf
+
+    real = pbf.decode_packed_varints
+    monkeypatch.setattr(pbf, "decode_packed_varints",
+                        lambda data: real(data)[:-1])
+    with pytest.raises(ValueError, match="counts sum"):
+        pbf._concat_packed([b"\x01\x02", b"\x03"])
+
+
+def test_ways_block_refuses_refs_cumsum_overflow():
+    """Way refs whose summed |delta| could wrap the block's int64 cumsum
+    are refused, not silently mis-decoded."""
+    from routers_spark.io.osm_pbf import (
+        _decode_ways_block,
+        _enc_int,
+        _enc_tag,
+        encode_varints,
+    )
+
+    def block(refs_per_way):
+        ways = b"".join(
+            _enc_tag(3, _enc_int(1, wid) + _enc_tag(8, encode_varints(
+                zigzag_encode(np.diff(np.concatenate(
+                    [[0], np.asarray(refs, dtype=np.int64)]))))))
+            for wid, refs in enumerate(refs_per_way, start=1))
+        return _enc_tag(1, _enc_tag(1, b"")) + _enc_tag(2, ways)
+
+    got = _decode_ways_block(block([[5, 7], [2**40, 2**40 + 3]]))
+    assert list(got["refs"]) == [[5, 7], [2**40, 2**40 + 3]]
+    with pytest.raises(ValueError, match="overflow"):
+        _decode_ways_block(block([[2**62 + 5], [2**62 + 7]]))

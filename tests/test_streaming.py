@@ -226,3 +226,31 @@ def test_incremental_weighing_only_pending(road, monkeypatch):
     merged = merge_by_revision(rows)
     batch = batch_edges(road, [(lon, lat) for _, lon, lat in TRACK])
     assert [r["edge_id"] for r in merged.values()] == batch
+
+
+def test_boundary_cache_tells_graphs_apart_under_one_graph_key():
+    """Two graphs solved under the same persisted graph_key (e.g. two
+    registries at one epoch name) must not share weighed boundaries: each
+    state gets what a fresh solve on its own graph gives."""
+    from routers_spark.streaming import match_stream as ms
+
+    nodes, edges = grid_network(6)
+    heavier = edges.copy()
+    heavier.loc[heavier["edge_id"] == 28, "weight"] = 9
+    trip = walk_trips(nodes, edges, n_trips=6, points_per_trip=6, seed=3)
+    trip = trip[trip["trip_id"] == "trip000000"].sort_values("seq")
+    obs = [(int(s) * 1_000_000, float(lo), float(la))
+           for s, lo, la in zip(trip["seq"], trip["lon"], trip["lat"])]
+    graphs = [build_packed_graph(nodes, e).build_cell_index()
+              for e in (edges, heavier)]
+
+    def fresh(g):
+        ms._BOUNDARY_LRU.clear()
+        return VehicleMatcherState().process(g, obs, graph_key="k")
+
+    want = [fresh(g) for g in graphs]
+    assert [r["edge_id"] for r in want[0]] != [r["edge_id"] for r in want[1]]
+    ms._BOUNDARY_LRU.clear()
+    got = [VehicleMatcherState().process(g, obs, graph_key="k")
+           for g in graphs]
+    assert got == want
